@@ -1,0 +1,10 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus's drain, which Spark keeps package-private:
+  * the tracer waits for every event of an operation to be delivered
+  * before it closes the operation's span. */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
