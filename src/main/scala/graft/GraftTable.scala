@@ -512,9 +512,13 @@ final class GraftTable(spark: SparkSession, dir: String,
         Some(org.apache.spark.sql.graftbridge.RddBridge
           .localCheckpointWithCount(current())._1)
       else None
-    val ops = statements.map(compileDml(name, _, systemTime, snap))
-      .reduce(_.unionByName(_))
-    validatedAppend(ops, systemTime)
+    // the snapshot is table-sized: release its blocks once the tx is
+    // written (or refused), not when the context ends
+    try {
+      val ops = statements.map(compileDml(name, _, systemTime, snap))
+        .reduce(_.unionByName(_))
+      validatedAppend(ops, systemTime)
+    } finally snap.foreach(org.apache.spark.sql.graftbridge.RddBridge.release)
   }
 
   /** [[requireDisjoint]] then append as ONE transaction. The ops plan is

@@ -181,6 +181,19 @@ object RddBridge {
         vs => org.apache.spark.sql.Row.fromSeq(vs))))
   }
 
+  /** Drop the blocks behind a frame built by one of the checkpoint
+    * helpers above, once nothing reads it any more — a local checkpoint
+    * otherwise lives (in executor memory/disk) until the context ends.
+    * A no-op for frames that are not checkpoints. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
+      // the context-level unpersist: RDD.unpersist would warn that a
+      // checkpointed lineage cannot be recomputed, which is the point
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+      case _ =>
+    }
+
   def localCheckpointWithTagCounts(df: DataFrame): (DataFrame, Map[Int, Long]) = {
     probeActions.incrementAndGet()
     val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]

@@ -697,6 +697,30 @@ class GraftTableSpec extends AnyFunSuite {
       "statement 2 read the pre-tx snapshot, so id 5 keeps its inserted bal")
   }
 
+  test("dmlTx releases its pre-tx snapshot, on success and on refusal") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dmlsnap").toString
+    val t = new GraftTable(spark, dir, Seq("bal"))
+    t.dml("acct", """INSERT INTO acct (_id, bal)
+      VALUES (1, CAST(100.0 AS DOUBLE)), (2, CAST(200.0 AS DOUBLE)),
+             (3, CAST(300.0 AS DOUBLE))""", ts("2020-01-01 00:00:00"))
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
+    // two reader statements: the tx materializes one shared snapshot
+    t.dmlTx("acct", Seq(
+      "UPDATE acct SET bal = bal + 1 WHERE _id = 1",
+      "DELETE FROM acct WHERE _id = 2"), ts("2020-02-01 00:00:00"))
+    assert(persisted == before,
+      s"persistent RDDs grew from $before to $persisted")
+    // a refused tx (two writes to id 3) releases it too
+    intercept[IllegalArgumentException](t.dmlTx("acct", Seq(
+      "UPDATE acct SET bal = CAST(1.0 AS DOUBLE) WHERE _id = 3",
+      "UPDATE acct SET bal = CAST(2.0 AS DOUBLE) WHERE _id = 3"),
+      ts("2020-03-01 00:00:00")))
+    assert(persisted == before,
+      s"persistent RDDs grew from $before to $persisted after a refusal")
+    assert(t.current().count() == 2L)
+  }
+
   test("dmlTx rejects overlapping writes to one id within a transaction") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dmlov").toString
     val t = new GraftTable(spark, dir, Seq("bal"))

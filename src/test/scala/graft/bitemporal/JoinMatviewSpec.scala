@@ -598,4 +598,20 @@ class JoinMatviewSpec extends AnyFunSuite {
     mv2.refresh()
     assertParity(mv2, fact, dim)
   }
+
+  test("a payload column named _sign is refused, not silently replaced " +
+      "by the signed delta's internal column") {
+    val fdir = java.nio.file.Files.createTempDirectory("graft_jmv_sf").toString
+    val ddir = java.nio.file.Files.createTempDirectory("graft_jmv_sd").toString
+    val fact = new GraftTable(spark, fdir, Seq("cust", "amt", "_sign"))
+    val dim = new GraftTable(spark, ddir, Seq("region"))
+    val e = intercept[IllegalArgumentException](
+      fact.starMatview("by_sign", Seq(dim -> "cust"), Seq("_sign"),
+        Seq("amt"), validAt, nBuckets = 8))
+    assert(e.getMessage.contains("_sign"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      fact.starMatview("sum_sign", Seq(dim -> "cust"), Seq("region"),
+        Seq("_sign"), validAt, nBuckets = 8))
+    assert(e2.getMessage.contains("_sign"), e2.getMessage)
+  }
 }

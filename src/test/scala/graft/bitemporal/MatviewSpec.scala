@@ -597,4 +597,25 @@ class MatviewSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("leading group column"), e2.getMessage)
   }
+
+  test("a payload column named _sign is refused, not silently replaced " +
+      "by the signed delta's internal column") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mv_sign").toString
+    val t = new GraftTable(spark, dir, Seq("_sign", "grp", "amt"))
+    val byIt = intercept[IllegalArgumentException](
+      t.matview("by_sign", "_sign", Seq("amt"), validAt, nBuckets = 8))
+    assert(byIt.getMessage.contains("_sign"), byIt.getMessage)
+    val sumOfIt = intercept[IllegalArgumentException](
+      t.matview("sum_sign", "grp", Seq("_sign"), validAt, nBuckets = 8))
+    assert(sumOfIt.getMessage.contains("_sign"), sumOfIt.getMessage)
+    // a view that does not group or aggregate by it is unaffected
+    t.put(Seq((1L, 5L, "a", "1.00"), (2L, -5L, "a", "2.00"))
+        .toDF("id", "s", "g", "m"), $"id",
+      lit("2020-01-01").cast("timestamp"), None,
+      Seq("_sign" -> $"s", "grp" -> $"g", "amt" -> $"m".cast("decimal(12,2)")),
+      ts("2024-01-01 00:00:00"))
+    val ok = t.matview("by_grp", "grp", Seq("amt"), validAt, nBuckets = 8)
+    ok.refresh()
+    assertParity(ok, t)
+  }
 }
